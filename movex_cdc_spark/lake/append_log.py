@@ -35,7 +35,7 @@ import json
 import os
 import time
 import uuid
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -162,9 +162,21 @@ class UnkeyedEventLog:
         stream_id: str = "default",
         epoch_id: int | None = None,
         max_attempts: int = 20,
+        pre_commit: "Callable[[], Any] | None" = None,
+        meta_update: "Callable[[dict], dict] | None" = None,
     ) -> dict[str, Any]:
         """Append a batch; fenced per (stream_id, epoch_id) like
         LakeTable.merge. Returns the lineage record.
+
+        ``pre_commit``: zero-arg callable invoked once after the segment
+        write and before the metadata commit — the caller's barrier for
+        work that must durably precede this commit (LakeTable.merge's
+        contract). If it raises, the segment is dropped and nothing
+        commits.
+
+        ``meta_update``: called with the metadata each commit attempt
+        rebases on; the keys it returns join that attempt's commit (the
+        MoR delta's row counters), so they stay correct across rebases.
 
         Optimistic concurrency: several writers (the multiplexed
         pipeline's per-table dispatch threads sharing one dead-letter
@@ -180,6 +192,13 @@ class UnkeyedEventLog:
             if last is not None and epoch_id <= last:
                 return {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
         files = self._write_segment(batch, m["version"] + 1)
+        if pre_commit is not None:
+            try:
+                pre_commit()
+            except Exception:
+                for d in {f.split(os.sep, 1)[0] for f in files}:
+                    self.fs.rmtree(os.path.join(self.path, d))
+                raise
         for _attempt in range(max_attempts):
             new_version = m["version"] + 1
             m2 = dict(m)
@@ -189,6 +208,8 @@ class UnkeyedEventLog:
             if epoch_id is not None:
                 m2["epochs"][stream_id] = epoch_id
             m2["schema"] = _union_schema(m.get("schema"), batch.schema)
+            if meta_update is not None:
+                m2.update(meta_update(m))
             try:
                 self._write_version(m2)
             except FileExistsError:

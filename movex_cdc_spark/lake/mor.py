@@ -81,14 +81,11 @@ class MergeOnReadTable:
         self.compact_rows = compact_rows
         self.compact_epochs = compact_epochs
         # reader-retention window for drained delta segments, in delta
-        # METADATA VERSIONS (each epoch advances two: append + counter);
+        # METADATA VERSIONS (each appended epoch advances one);
         # widen for deployments with slow concurrent readers
         self.expire_keep_last = expire_keep_last
 
     # -------------------------------------------------------- helpers
-    def _delta_rows(self) -> int:
-        return int(self.delta.meta().get("rows", 0))
-
     def evolve_schema(self, batch_payload_schema) -> Any:
         return self.base.evolve_schema(batch_payload_schema)
 
@@ -106,14 +103,20 @@ class MergeOnReadTable:
         op_col: str = "op",
         stream_id: str = "default",
         epoch_id: int | None = None,
-        lineage_extra: dict[str, Any] | None = None,
-        prune_source: DataFrame | None = None,
+        pre_commit: "Any | None" = None,
     ) -> dict[str, Any]:
         """Append the (already LWW-deduped) change batch to the delta
         log — O(batch), no bucket rewrite. Fenced like LakeTable.merge.
-        ``prune_source`` is accepted for LakeTable interface parity and
-        ignored: a delta append touches no buckets, so there is nothing
-        to prune."""
+
+        The ``rows``/``delta_epochs`` counters ride the append's own
+        metadata commit: the row count is observed off the segment
+        write, and each commit attempt adds it to the metadata it
+        rebases on, so the append and its counters commit together or
+        not at all.
+
+        ``pre_commit``: as in LakeTable.merge — invoked after the
+        segment write, before the commit; if it raises, nothing
+        commits."""
         import time as _time
 
         from pyspark.sql import Observation
@@ -130,28 +133,27 @@ class MergeOnReadTable:
         )
         obs = Observation(f"mor_{stream_id}_{epoch_id}_{_time.monotonic_ns()}")
         norm = norm.observe(obs, F.count(F.lit(1)).alias("n"))
-        lineage = self.delta.append(norm, stream_id=stream_id, epoch_id=epoch_id)
+        counters: dict[str, int] = {}
+
+        def _count(m: dict[str, Any]) -> dict[str, int]:
+            counters["rows"] = int(m.get("rows", 0)) + int(obs.get.get("n", 0))
+            counters["delta_epochs"] = int(m.get("delta_epochs", 0)) + 1
+            return counters
+
+        lineage = self.delta.append(
+            norm, stream_id=stream_id, epoch_id=epoch_id,
+            pre_commit=pre_commit, meta_update=_count,
+        )
         if lineage.get("skipped"):
             return lineage
-        # row count rides a follow-up metadata version (atomic pointer
-        # swap like every commit; the count came free off the write job)
-        m = self.delta.meta()
-        m["rows"] = int(m.get("rows", 0)) + int(obs.get.get("n", 0))
-        m["delta_epochs"] = int(m.get("delta_epochs", 0)) + 1
-        self._rewrite_meta(m)
-        lineage["delta_rows"] = m["rows"]
+        lineage["delta_rows"] = counters["rows"]
         lineage["mode"] = "delta-append"
-        if m["rows"] >= self.compact_rows or (
+        if counters["rows"] >= self.compact_rows or (
             self.compact_epochs is not None
-            and m["delta_epochs"] >= self.compact_epochs
+            and counters["delta_epochs"] >= self.compact_epochs
         ):
             lineage["compaction"] = self.compact()
         return lineage
-
-    def _rewrite_meta(self, m: dict[str, Any]) -> None:
-        m2 = dict(m)
-        m2["version"] = m["version"] + 1
-        self.delta._write_version(m2)
 
     # ----------------------------------------------------------- read
     def read(self, include_deleted: bool = False) -> DataFrame:

@@ -79,11 +79,6 @@ class CommitConflict(Exception):
 
 
 class LakeTable:
-    # merge() consumes prune_source (probe-based bucket pruning). Sinks
-    # that accept-and-ignore it (MergeOnReadTable) leave this False so
-    # callers never attach work to a probe that will not run.
-    supports_prune_source = True
-
     def __init__(self, spark: SparkSession, path: str, fs=None):
         self.spark = spark
         self.path = path
@@ -409,8 +404,6 @@ class LakeTable:
         op_col: str = "op",
         stream_id: str = "default",
         epoch_id: int | None = None,
-        lineage_extra: dict[str, Any] | None = None,
-        prune_source: DataFrame | None = None,
         probe: "tuple[list[int], bool] | None" = None,
         pre_commit: "Any | None" = None,
     ) -> dict[str, Any]:
@@ -433,22 +426,15 @@ class LakeTable:
         for ``stream_id`` the call is a NO-OP and returns the fence
         record instead (idempotent retry).
 
-        ``prune_source``: optional cheaper frame to compute the
-        touched-bucket set from — any frame whose key-column bucket set
-        EQUALS the batch's (the caller's pre-LWW valid slice qualifies:
-        LWW collapses rows per key, never adds or removes keys). When
-        given, the probe action runs a key-pruned scan of that frame
-        instead of executing the batch's whole aggregate chain, and the
-        batch plan itself runs exactly once — inside the snapshot write
-        job.
-
         ``probe``: precomputed probe result ``(touched_buckets,
         has_null_keys)`` from a caller that already ran the probe job
         itself (apply_batch_flagged folds it into the same job that
         builds the micro-batch cache and counts poison — one fewer
-        action per epoch). Takes precedence over ``prune_source``; the
-        written-outside-touched commit guard below still fails loudly
-        if the caller's probe diverges from the batch keys.
+        action per epoch). The batch plan then runs exactly once,
+        inside the snapshot write job. Any bucket SUPERSET of the
+        batch's is safe (it prunes less); the written-outside-touched
+        commit guard below fails loudly if the caller's probe misses a
+        batch bucket.
 
         ``pre_commit``: zero-arg callable invoked after the snapshot
         write but BEFORE the metadata commit. The caller's barrier for
@@ -506,35 +492,6 @@ class LakeTable:
             src_has_null_keys = bool(probe[1])
             src_cached = False
             if src_has_null_keys:
-                src = src.persist()
-                src_cached = True
-        elif prune_source is not None:
-            # Cheap probe path (streaming fast path): the caller's
-            # pre-LWW cached slice has the same key set as the batch
-            # (LWW collapses per key, never adds/removes keys), and the
-            # probe plan prunes to the key columns — so this action is a
-            # light cache scan and the heavy batch plan (LWW aggregate,
-            # payload assembly) runs exactly ONCE, fused into the
-            # snapshot write job. The old shape materialized the full
-            # deduped payload for the collect and re-read it for the
-            # write — an extra round trip of every merged byte. The same
-            # probe also reports whether ANY batch key is null, so the
-            # null-branch join below can be skipped without touching the
-            # heavy plan.
-            src_cached = False
-            probe_rows = (
-                prune_source.select(
-                    bucket_expr(key_cols, n_buckets).alias(BUCKET_COL),
-                    null_key_pred.alias("__nk"),
-                )
-                .distinct()
-                .collect()
-            )
-            touched = sorted({r[0] for r in probe_rows})
-            src_has_null_keys = any(r["__nk"] for r in probe_rows)
-            if src_has_null_keys:
-                # rare: null-keyed rows present — persist so the two
-                # join branches read the aggregate once, not twice
                 src = src.persist()
                 src_cached = True
         else:
@@ -652,7 +609,7 @@ class LakeTable:
 
         # Contract guard: the snapshot commit only adopts buckets in
         # `touched`. If the write produced a bucket OUTSIDE that set,
-        # the prune_source's key set diverged from the batch's — those
+        # the caller's probe diverged from the batch's keys — those
         # rows would be silently orphaned (written but never listed),
         # i.e. lost. Fail loudly and drop the staged snapshot instead.
         written = {
@@ -665,7 +622,7 @@ class LakeTable:
             self.fs.rmtree(snap_dir)
             raise RuntimeError(
                 f"merge wrote buckets {sorted(extra)} outside the probed "
-                f"touched set {sorted(touched)} — prune_source keys diverge "
+                f"touched set {sorted(touched)} — probe keys diverge "
                 "from the batch keys; snapshot aborted, nothing committed"
             )
 
@@ -691,9 +648,6 @@ class LakeTable:
             "buckets_total": n_buckets,
             "timings": timings,
         }
-        if lineage_extra:
-            lineage.update(lineage_extra)
-
         m2 = dict(m)
         m2["version"] = new_version
         m2["parent"] = m["version"]

@@ -22,7 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from movex_cdc_spark.functions.hashing import sha256_builtin, content_sha256
-from movex_cdc_spark.lake.table import LakeTable
+from movex_cdc_spark.lake.mor import MergeOnReadTable
+from movex_cdc_spark.lake.table import LakeTable, bucket_expr
 from movex_cdc_spark.operators.filters import (
     bad_op_predicate,
     condition_filter,
@@ -33,6 +34,7 @@ from movex_cdc_spark.operators.filters import (
     suppress_noop_updates,
 )
 from movex_cdc_spark.operators.lww import lww_dedup, lww_dedup_maxby, lww_dedup_salted
+from movex_cdc_spark.session import inheriting_executor
 
 REPO_FILES_SCHEMA = T.StructType(
     [
@@ -48,6 +50,21 @@ REPO_FILES_SCHEMA = T.StructType(
 KEY_COLS = ["repo", "path"]
 
 
+def _capture_filters(
+    events: DataFrame,
+    condition_sql: str | None,
+    table_cfg: "object | None",
+) -> DataFrame:
+    """Condition filter → no-op suppression. A table config's per-op
+    conditions (P3) replace ``condition_sql`` and the default exclude
+    filter; both keep the poison exemption."""
+    if table_cfg is not None:
+        df = per_op_condition_filter(events, table_cfg.conditions)
+    else:
+        df = condition_filter(events, condition_sql or default_exclude_condition())
+    return suppress_noop_updates(df)
+
+
 def _filter_validate_project(
     events: DataFrame,
     condition_sql: str | None,
@@ -57,11 +74,7 @@ def _filter_validate_project(
     poison split → (config projection + expressions). Validation and
     no-op checks see the ORIGINAL row, as the reference trigger does;
     projection shapes only the captured payload."""
-    if table_cfg is not None:
-        df = per_op_condition_filter(events, table_cfg.conditions)
-    else:
-        df = condition_filter(events, condition_sql or default_exclude_condition())
-    df = suppress_noop_updates(df)
+    df = _capture_filters(events, condition_sql, table_cfg)
     # NOTE: deliberately NOT persisted HERE. The poison chain re-scans
     # the batch; for micro-batches the streaming pipeline persists the
     # parsed batch around this whole chain (MEMORY_AND_DISK, +15%
@@ -127,10 +140,13 @@ POISON_FLAG = "__poison"
 
 
 def flag_dispositions(
-    events: DataFrame, condition_sql: str | None = None
+    events: DataFrame,
+    condition_sql: str | None = None,
+    table_cfg: "object | None" = None,
 ) -> DataFrame:
     """Single-projection disposition pass for the streaming cache:
-    condition filter + no-op suppression applied, poison rows FLAGGED
+    condition filter + no-op suppression applied (``table_cfg``'s per-op
+    conditions when given, as in prepare_batch), poison rows FLAGGED
     (not split), ``old_content`` dropped — it is only consumed by the
     no-op check, and at ~the payload's size it is the single biggest
     column in the micro-batch cache. The caller persists the result and
@@ -139,13 +155,14 @@ def flag_dispositions(
     (previously the full batch was cached old-image and all, and the
     poison split re-scanned it).
 
-    Only valid for the config-less path: table-config projection and
-    envelope assembly may reference ``old_content``, so the pipeline
-    falls back to caching the full parsed batch when either is present.
-    """
-    df = condition_filter(events, condition_sql or default_exclude_condition())
-    df = suppress_noop_updates(df)
-    return df.withColumn(POISON_FLAG, poison_predicate()).drop("old_content")
+    A config with column expressions keeps ``old_content``: an
+    expression may read the old image. The config's projection is not
+    applied here — apply_batch_flagged projects the valid slice."""
+    df = _capture_filters(events, condition_sql, table_cfg)
+    df = df.withColumn(POISON_FLAG, poison_predicate())
+    if table_cfg is not None and table_cfg.expressions:
+        return df
+    return df.drop("old_content")
 
 
 def split_flagged(flagged: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -168,16 +185,20 @@ def split_flagged(flagged: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def apply_batch_flagged(
-    table: LakeTable,
+    table: "LakeTable | MergeOnReadTable",
     flagged: DataFrame,
     epoch_id: int | None = None,
     stream_id: str = "default",
     dead_letter: "DeadLetterTable | None" = None,
     metrics: "object | None" = None,
-    lww_mode: str = "maxby",
+    table_cfg: "object | None" = None,
 ) -> dict[str, Any]:
     """apply_batch over a pre-flagged (cached) micro-batch — the
-    streaming fast path; filters already ran in flag_dispositions.
+    streaming apply flow of every keyed sink; filters already ran in
+    flag_dispositions (with the same ``table_cfg``).
+
+    ``table_cfg``'s projection and expressions shape the VALID slice
+    only, before LWW; quarantined rows keep the event shape.
 
     ONE probe job over the cached batch carries everything the driver
     needs before the merge write: the touched-bucket set + null-key
@@ -188,9 +209,12 @@ def apply_batch_flagged(
     part of the ~2 s dl_append_s per 1M-event epoch). Skipping the
     empty append is safe: the dead-letter fence is consulted through
     monotone epoch ids, and an epoch that appended nothing leaves
-    nothing to fence or replay. Sinks without bucket pruning
-    (MergeOnReadTable) keep the generic flow — for them the probe job
-    would be pure extra work."""
+    nothing to fence or replay.
+
+    Both sink kinds take this flow. A COW LakeTable merges with the
+    probe's bucket set; a MergeOnReadTable appends to its delta, which
+    needs no buckets. Either way the dead-letter commit precedes the
+    sink's commit (the ``pre_commit`` barrier)."""
     t0 = time.monotonic()
     valid, poison = split_flagged(flagged)
     if "old_content" not in poison.columns:
@@ -202,29 +226,31 @@ def apply_batch_flagged(
         # old image was simply not retained for quarantine (documented
         # fidelity trade of the slim cache).
         poison = poison.withColumn("old_content", F.lit(None).cast("string"))
+    if table_cfg is not None:
+        # P1/P2 projection + column_expressions, after validation (as in
+        # prepare_batch) and before the slim select drops ts/txid/
+        # old_content, which expressions may read
+        valid = table_cfg.apply_projection(valid)
     keep = [c for c in valid.columns if c not in ("old_content", "ts", "txid", "is_noop")]
     slim = valid.select(*keep)
-    dedup = lww_dedup_maxby(slim, KEY_COLS) if lww_mode == "maxby" else lww_dedup(slim, KEY_COLS)
-    ready = dedup.withColumn(
+    ready = lww_dedup_maxby(slim, KEY_COLS).withColumn(
         "content_sha",
         F.when(F.col("content").isNotNull(), sha256_builtin("content")),
     )
-    if not getattr(table, "supports_prune_source", False):
-        return _apply_prepared(
-            table, ready, poison, epoch_id, stream_id, dead_letter, metrics,
-            evolve=True, obs_t0=t0,
-        )
-    from movex_cdc_spark.lake.table import bucket_expr
-
-    m = table.meta()
+    mor = isinstance(table, MergeOnReadTable)
+    m = table.base.meta() if mor else table.meta()
+    fences = table.delta.meta()["epochs"] if mor else m["epochs"]
     if epoch_id is not None:
-        last = m["epochs"].get(stream_id)
+        last = fences.get(stream_id)
         if last is not None and epoch_id <= last:
             # Replayed epoch: the merge is fenced. Only the dead-letter
             # append may still be pending (crash between its commit and
             # the table commit) — its OWN fence resolves that without
             # any probe job here (append checks its metadata before
-            # touching the batch).
+            # touching the batch). A replay of a CLEAN epoch therefore
+            # pays one empty dead-letter append: the original skipped
+            # it, so the fence is not advanced, and without the probe
+            # there is no poison count to skip on (replay-only cost).
             if dead_letter is not None:
                 dead_letter.append(poison, stream_id=stream_id, epoch_id=epoch_id)
             return {"skipped": True, "stream_id": stream_id, "epoch_id": epoch_id}
@@ -241,14 +267,18 @@ def apply_batch_flagged(
         p = F.col(k).isNull()
         null_key_pred = p if null_key_pred is None else (null_key_pred | p)
     ok = ~F.col(POISON_FLAG)
+    # the probe buckets the keys the merge writes: projected, when a
+    # config may null a key column for some op (Catalyst prunes the
+    # unused projection columns)
+    probe_src = flagged if table_cfg is None else table_cfg.apply_projection(flagged)
     obs = Observation(f"apply_{stream_id}_{epoch_id}_{time.monotonic_ns()}")
     _t = time.monotonic()
-    # counters are valid-only (same valid_events_pre_dedup scope as
-    # before — the observation used to ride the valid slice); poison
-    # rows flow through the observe node and are counted separately,
-    # then filtered before the bucket distinct
+    # counters are valid-only (valid_events_pre_dedup: the captured
+    # events, as the reference's per-event transfer counters count
+    # them); poison rows flow through the observe node and are counted
+    # separately, then filtered before the bucket distinct
     probe_rows = (
-        flagged.select(POISON_FLAG, "seq", "op", *key_cols)
+        probe_src.select(POISON_FLAG, "seq", "op", *key_cols)
         .observe(
             obs,
             F.sum(ok.cast("long")).alias("events"),
@@ -273,7 +303,6 @@ def apply_batch_flagged(
 
     n_poison = 0
     dl_wall = 0.0
-    dl_t0 = time.monotonic()
     dl_future = None
     pool = None
     if dead_letter is not None and int(got.get("n_poison_seen") or 0) > 0:
@@ -284,19 +313,19 @@ def apply_batch_flagged(
         # still durably precedes the table commit (same crash ordering
         # as the serial form — a crash between the two replays only
         # the fenced append), but its wall overlaps the snapshot write
-        # instead of adding to the epoch.
-        from concurrent.futures import ThreadPoolExecutor
+        # instead of adding to the epoch. The worker carries this
+        # thread's job group, so stopping the query cancels its job.
+        def _append() -> tuple[int, float]:
+            _t = time.monotonic()
+            n = dead_letter.append(poison, stream_id=stream_id, epoch_id=epoch_id)
+            return n, round(time.monotonic() - _t, 4)
 
-        pool = ThreadPoolExecutor(max_workers=1)
-        dl_future = pool.submit(
-            dead_letter.append, poison, stream_id=stream_id, epoch_id=epoch_id
-        )
+        pool = inheriting_executor(1)
+        dl_future = pool.submit(_append)
 
     try:
         if not touched:
             lineage: dict[str, Any] = {"skipped": True, "reason": "empty batch"}
-            if dl_future is not None:
-                n_poison = dl_future.result()
         else:
             lineage = table.merge(
                 ready,
@@ -304,13 +333,11 @@ def apply_batch_flagged(
                 op_col="op",
                 stream_id=stream_id,
                 epoch_id=epoch_id,
-                probe=(touched, has_null_keys),
                 pre_commit=dl_future.result if dl_future is not None else None,
+                **({} if mor else {"probe": (touched, has_null_keys)}),
             )
-            if dl_future is not None:
-                n_poison = dl_future.result()  # already done (pre_commit barrier)
         if dl_future is not None:
-            dl_wall = round(time.monotonic() - dl_t0, 4)
+            n_poison, dl_wall = dl_future.result()  # done at pre_commit
     finally:
         if pool is not None:
             pool.shutdown(wait=True)
@@ -319,7 +346,7 @@ def apply_batch_flagged(
     timings = lineage.setdefault("timings", {})
     timings["probe_s"] = probe_wall  # the external probe, not merge's
     if dead_letter is not None:
-        timings["dl_append_s"] = dl_wall  # overlapped with the write
+        timings["dl_append_s"] = dl_wall  # the append's own wall, overlapped
     if lineage.get("skipped"):
         return lineage
     lineage["counter_scope"] = "valid_events_pre_dedup"
@@ -360,6 +387,10 @@ def apply_batch(
 ) -> dict[str, Any]:
     """Apply one micro-batch of change events with exactly-once fencing.
 
+    The generic flow for callers without a flagged cache (batch replay,
+    retry heal, stray reprocess, the envelope path): a serial
+    dead-letter append, then the sink's own merge probe.
+
     ``table_cfg`` compiles capture config (conditions / projection /
     expressions) into the batch plan — see prepare_batch. A config that
     adds expression columns triggers schema evolution on the lake table
@@ -369,14 +400,6 @@ def apply_batch(
         events, condition_sql=condition_sql, salted=salted,
         use_pandas_sha=use_pandas_sha, lww_mode=lww_mode, table_cfg=table_cfg,
     )
-    return _apply_prepared(
-        table, ready, poison, epoch_id, stream_id, dead_letter, metrics, evolve, obs_t0=t0
-    )
-
-
-def _apply_prepared(table, ready, poison, epoch_id, stream_id, dead_letter, metrics,
-                    evolve, obs_t0, prune_source=None):
-    t0 = obs_t0
     if evolve:
         batch_payload = T.StructType(
             [f for f in ready.schema.fields if f.name not in ("seq", "op", "old_content", "ts", "txid", "is_noop")]
@@ -386,41 +409,19 @@ def _apply_prepared(table, ready, poison, epoch_id, stream_id, dead_letter, metr
     # single-pass metrics riding a job the batch already runs — no
     # extra scan (reference A1 statistics counters,
     # statistic_counter.rb:14-48; the partial->final combine is Spark's
-    # own partial aggregation)
+    # own partial aggregation). They ride the merged batch, so they
+    # count post-LWW deduped KEYS (the rows actually merged), unlike
+    # apply_batch_flagged's pre-LWW event counters; counter_scope
+    # records which.
     obs = Observation(f"apply_{stream_id}_{epoch_id}_{time.monotonic_ns()}")
-    obs_aggs = [
+    ready = ready.observe(
+        obs,
         F.count(F.lit(1)).alias("events"),
         F.max("seq").alias("max_seq"),
         F.sum(F.when(F.col("op") == "I", 1).otherwise(0)).alias("n_insert"),
         F.sum(F.when(F.col("op") == "U", 1).otherwise(0)).alias("n_update"),
         F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_delete"),
-    ]
-    # A sink that ignores prune_source (MergeOnReadTable) never runs the
-    # probe — attaching the observation there would block obs.get
-    # forever. Only use the probe when the sink actually consumes it.
-    use_probe = prune_source is not None and getattr(
-        table, "supports_prune_source", False
     )
-    if use_probe:
-        # Probe path: the observation rides the bucket-probe COLLECT,
-        # counting valid captured events pre-LWW (exactly what the
-        # reference's per-event transfer counters count). It must NOT
-        # ride `ready` here: with the probe, `ready`'s only action is
-        # the COW snapshot write (AQE multi-branch join + partitionBy)
-        # inside the streaming micro-batch, and that specific write
-        # does not deliver observed metrics — obs.get deadlocked the
-        # stream (reproduced twice). Simple append writes DO deliver
-        # them in foreachBatch (the MoR row count and the envelope-sink
-        # reject count have ridden their append writes since round 2),
-        # so the failure is the AQE snapshot-write shape, not writes in
-        # general — but the probe collect is the safe, always-runs
-        # carrier here.
-        prune_source = prune_source.observe(obs, *obs_aggs)
-        counter_scope = "valid_events_pre_dedup"
-    else:
-        prune_source = None  # an ignored probe must carry no work
-        ready = ready.observe(obs, *obs_aggs)
-        counter_scope = "deduped_keys"
 
     n_poison = 0
     dl_wall = 0.0
@@ -442,7 +443,6 @@ def _apply_prepared(table, ready, poison, epoch_id, stream_id, dead_letter, metr
         op_col="op",
         stream_id=stream_id,
         epoch_id=epoch_id,
-        prune_source=prune_source,
     )
     lineage["merge_latency_s"] = round(time.monotonic() - t0, 4)
     lineage["n_poison"] = n_poison
@@ -457,11 +457,7 @@ def _apply_prepared(table, ready, poison, epoch_id, stream_id, dead_letter, metr
         lineage.setdefault("timings", {})["dl_append_s"] = dl_wall
     if lineage.get("skipped"):
         return lineage
-    # Counter semantics differ by attach point and are recorded, never
-    # mixed silently: the probe path counts valid captured EVENTS
-    # pre-LWW (reference statistic_counter semantics); the generic and
-    # MoR paths count post-LWW deduped KEYS (the rows actually merged).
-    lineage["counter_scope"] = counter_scope
+    lineage["counter_scope"] = "deduped_keys"
     if metrics is not None:
         got = obs.get
         metrics.append(
@@ -477,7 +473,7 @@ def _apply_prepared(table, ready, poison, epoch_id, stream_id, dead_letter, metr
                 "max_seq": got.get("max_seq"),
                 "buckets_touched": len(lineage.get("buckets_touched", [])),
                 "merge_latency_s": lineage["merge_latency_s"],
-                "counter_scope": counter_scope,
+                "counter_scope": "deduped_keys",
             }
         )
         lineage["metrics"] = got

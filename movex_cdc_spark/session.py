@@ -120,3 +120,28 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def inheriting_executor(max_workers: int):
+    """Driver thread pool whose workers start with the calling thread's
+    Spark local properties (job group, scheduler pool) — the pool form
+    of ``pyspark.InheritableThread``. Jobs a worker submits join the
+    caller's job group, so a streaming ``query.stop()`` cancels them
+    together with the micro-batch. Each worker gets its own copy: Spark
+    writes per-execution keys into a thread's properties. Outside
+    pinned-thread mode a Python thread owns no JVM thread, and this is
+    a plain pool."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from py4j.clientserver import ClientServer
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None or not isinstance(SparkContext._gateway, ClientServer):
+        return ThreadPoolExecutor(max_workers=max_workers)
+    jsc = sc._jsc.sc()
+    props = jsc.getLocalProperties().clone()
+    return ThreadPoolExecutor(
+        max_workers=max_workers,
+        initializer=lambda: jsc.setLocalProperties(props.clone()),
+    )

@@ -31,6 +31,7 @@ from movex_cdc_spark.operators.apply import (
     apply_batch_unkeyed,
     flag_dispositions,
 )
+from movex_cdc_spark.session import inheriting_executor
 from movex_cdc_spark.sources.events import (
     PAYLOAD_EVENTS_SCHEMA,
     parse_payload_events,
@@ -93,7 +94,10 @@ class CdcStreamPipeline:
         )
         self.metrics = MetricsTable(spark, metrics_dir) if metrics_dir else None
         self.condition_sql = condition_sql
-        self.salted = salted
+        # `salted` is accepted and ignored: every apply here runs the
+        # max_by LWW, whose map-side partial combine already bounds hot
+        # keys, so there is no salting to switch on (the frozen bench
+        # harness still passes it)
         self.max_files_per_trigger = max_files_per_trigger
         # payload_format: source rows are Event_Logs-shaped (msg_key +
         # JSON payload); the event parse (from_json) runs first
@@ -144,18 +148,20 @@ class CdcStreamPipeline:
         # would be a no-op exactly where it is safe.
         if self.payload_format:
             batch_df = parse_payload_events(batch_df)
-        # Fast path (no envelope sink, no table config): run the whole
+        # Flagged flow (no envelope sink, keyed sink): run the whole
         # disposition chain — condition filter, no-op suppression,
         # poison FLAG — inside the cache-building projection and drop
-        # old_content before the persist. The JSON parse and the cache
-        # write then happen exactly once per micro-batch, the cache
-        # loses its biggest column (the old image), and the poison
-        # quarantine is a cheap flag-slice of the cache instead of a
-        # second full-parse scan. Envelope/config paths keep the full
-        # parsed cache: both may read old_content / ts / txid.
-        fast = self.envelope_sink is None and self.config is None
+        # old_content before the persist (a config with expressions
+        # keeps it). The JSON parse and the cache write then happen
+        # exactly once per micro-batch, the cache loses its biggest
+        # column (the old image), and the poison quarantine is a cheap
+        # flag-slice of the cache instead of a second full-parse scan.
+        # The envelope path keeps the full parsed cache (its envelope
+        # reads old_content / ts / txid), as does the unkeyed append.
+        cfg = self._table_cfg()
+        fast = self.envelope_sink is None and (cfg is None or cfg.key_handling != "N")
         if fast:
-            batch_df = flag_dispositions(batch_df, self.condition_sql)
+            batch_df = flag_dispositions(batch_df, self.condition_sql, table_cfg=cfg)
         # MEMORY_AND_DISK: an oversized batch spills instead of
         # GC-thrashing (measured +15% on the 4×1M-epoch bench; a
         # MEMORY_ONLY cache of a 16M-row full backlog measured WORSE in
@@ -171,15 +177,15 @@ class CdcStreamPipeline:
                     stream_id=self.stream_id,
                     dead_letter=self.dead_letter,
                     metrics=self.metrics,
+                    table_cfg=cfg,
                 )
                 self.epochs.append(lin)
             else:
-                self._apply_inner(batch_df, epoch_id)
+                self._apply_inner(batch_df, epoch_id, cfg)
         finally:
             batch_df.unpersist()
 
-    def _apply_inner(self, batch_df, epoch_id: int) -> None:
-        cfg = self._table_cfg()
+    def _apply_inner(self, batch_df, epoch_id: int, cfg) -> None:
         if self.envelope_sink is not None:
             valid, _poison = _filter_validate_project(
                 batch_df, self.condition_sql, cfg
@@ -225,7 +231,6 @@ class CdcStreamPipeline:
                 epoch_id=epoch_id,
                 stream_id=self.stream_id,
                 condition_sql=self.condition_sql,
-                salted=self.salted,
                 dead_letter=self.dead_letter,
                 metrics=self.metrics,
                 table_cfg=cfg,
@@ -284,7 +289,8 @@ class MultiplexedCdcPipeline:
     (conditions / column flags / expressions / key handling) and its
     own sink:
 
-      key_handling != 'N'  → apply_batch MERGE into its LakeTable
+      key_handling != 'N'  → flag_dispositions cache + apply_batch_flagged
+                             into its LakeTable or MergeOnReadTable
       key_handling == 'N'  → apply_batch_unkeyed append into its log
 
     Exactly-once composes per table: each sink fences (stream_id,
@@ -330,7 +336,7 @@ class MultiplexedCdcPipeline:
             DeadLetterTable(spark, dead_letter_dir, fs=fs) if dead_letter_dir else None
         )
         self.metrics = MetricsTable(spark, metrics_dir) if metrics_dir else None
-        self.salted = salted
+        # `salted`: accepted and ignored, as in CdcStreamPipeline
         self.max_files_per_trigger = max_files_per_trigger
         # same seam as CdcStreamPipeline.source_df: a pre-built
         # streaming frame in MULTIPLEX_EVENTS_SCHEMA (e.g. a tagged
@@ -421,7 +427,7 @@ class MultiplexedCdcPipeline:
             else:
                 apply_batch(
                     self.sinks[name], sub, epoch_id=token, stream_id=stream,
-                    salted=self.salted, dead_letter=self.dead_letter,
+                    dead_letter=self.dead_letter,
                     metrics=self.metrics, table_cfg=cfg,
                 )
         # NULL-tag rows must survive the rewrite: NULL.isin(...) is
@@ -493,11 +499,9 @@ class MultiplexedCdcPipeline:
                     batch.filter(F.col("table_name") == name)
                 )
                 # per-table stream id: the shared dead-letter log and
-                # metrics table fence on (stream_id, epoch_id), so N
-                # tables appending under ONE id would let the first
-                # table's append fence out every other table's poison
-                # in the same epoch (the append runs even when poison is
-                # empty, by design — see _apply_prepared)
+                # metrics table fence on (stream_id, epoch_id), so two
+                # tables appending under ONE id in the same epoch would
+                # let the first append fence out the other's poison
                 tbl_stream_id = f"{self.stream_id}:{name}"
                 if cfg.key_handling == "N":
                     return apply_batch_unkeyed(
@@ -508,24 +512,30 @@ class MultiplexedCdcPipeline:
                         table_cfg=cfg,
                         dead_letter=self.dead_letter,
                     )
-                return apply_batch(
-                    self.sinks[name],
-                    sub,
-                    epoch_id=epoch_id,
-                    stream_id=tbl_stream_id,
-                    salted=self.salted,
-                    dead_letter=self.dead_letter,
-                    metrics=self.metrics,
-                    table_cfg=cfg,
+                # one flagged cache per table, built by its probe job
+                flagged = flag_dispositions(sub, table_cfg=cfg).persist(
+                    StorageLevel.MEMORY_AND_DISK
                 )
+                try:
+                    return apply_batch_flagged(
+                        self.sinks[name],
+                        flagged,
+                        epoch_id=epoch_id,
+                        stream_id=tbl_stream_id,
+                        dead_letter=self.dead_letter,
+                        metrics=self.metrics,
+                        table_cfg=cfg,
+                    )
+                finally:
+                    flagged.unpersist()
 
             todo = [(n, c) for n, c in self.config.tables.items() if n in present]
             workers = self.dispatch_parallelism or min(len(todo), 8) or 1
             per_table: dict[str, dict[str, Any]] = {}
             if workers > 1 and len(todo) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=workers) as pool:
+                # workers carry this thread's job group: stopping the
+                # query cancels their jobs too
+                with inheriting_executor(workers) as pool:
                     futures = {n: pool.submit(_dispatch_one, n, c) for n, c in todo}
                 # deterministic config order in the lineage record; the
                 # first failure propagates and fails the epoch (replay

@@ -149,32 +149,39 @@ def test_merge_with_retry_on_commit_conflict(spark, tmp_path):
 
 
 def test_merge_probe_path_and_divergence_guard(spark, tmp_lake):
-    """prune_source drives bucket pruning without persisting src; a
-    prune_source whose key set diverges from the batch must abort the
+    """A caller-supplied probe drives bucket pruning without persisting
+    src; a probe whose bucket set misses the batch's must abort the
     snapshot loudly instead of silently orphaning written buckets."""
     import pytest
-    from pyspark.sql import functions as F
+
+    from movex_cdc_spark.lake.table import bucket_expr
 
     t = _table(spark, tmp_lake, n_buckets=8)
+
+    def probe_of(df):
+        rows = df.select(
+            bucket_expr(KEY_COLS, 8).alias("b"),
+            (F.col("repo").isNull() | F.col("path").isNull()).alias("nk"),
+        ).distinct().collect()
+        return sorted({r["b"] for r in rows}), any(r["nk"] for r in rows)
+
     rows = [(i, f"r{i}", f"p{i}", "c", "py", f"v{i}", "I") for i in range(40)]
     batch = _batch(spark, rows)
-    probe = batch.select("repo", "path", "seq", "op")
-    lin = t.merge(batch, epoch_id=0, prune_source=probe)
+    t.merge(batch, epoch_id=0, probe=probe_of(batch))
     assert t.read().count() == 40
-    v_after = t.current_version()
 
-    # superset probe (extra keys) is SAFE: prunes less, loses nothing
+    # superset probe (extra buckets) is SAFE: prunes less, loses nothing
     more = _batch(spark, [(100, "rX", "pX", "c", "py", "vX", "I")])
-    sup = more.unionByName(batch.limit(5)).select("repo", "path", "seq", "op")
-    t.merge(more, epoch_id=1, prune_source=sup)
+    t.merge(more, epoch_id=1, probe=probe_of(more.unionByName(batch.limit(5))))
     assert t.read().count() == 41
 
     # diverging probe (MISSING the batch's buckets) aborts, commits nothing
     batch2 = _batch(spark, [(200, f"rY{i}", "p", "c", "py", "y", "I") for i in range(8)])
-    wrong = batch.limit(1).select("repo", "path", "seq", "op")  # bucket of r0 only
+    wrong = probe_of(batch.limit(1))  # bucket of r0 only
+    assert set(probe_of(batch2)[0]) - set(wrong[0])
     before = t.current_version()
     with pytest.raises(RuntimeError, match="outside the probed"):
-        t.merge(batch2, epoch_id=2, prune_source=wrong)
+        t.merge(batch2, epoch_id=2, probe=wrong)
     assert t.current_version() == before
     assert t.read().count() == 41
 

@@ -11,6 +11,35 @@ from movex_cdc_spark.operators.apply import KEY_COLS, REPO_FILES_SCHEMA, apply_b
 from movex_cdc_spark.operators.lww import lww_dedup_maxby
 
 
+COUNTERS = ("events", "n_insert", "n_update", "n_delete", "n_poison", "max_seq")
+
+
+def expected_counters(ev, keep=None):
+    """Pandas model of one epoch's A1 counters (COUNTERS order) under
+    the flagged flow: the condition (``keep``, default: no EXCLUDE
+    marker; poison rows are exempt) and no-op suppression drop events,
+    then valid events are counted per op and poison rows separately."""
+    from movex_cdc_spark.datagen import EXCLUDE_MARKER
+
+    poison = (ev["content"].isna() & ev["op"].isin(["I", "U"])) | ~ev["op"].isin(["I", "U", "D"])
+    if keep is None:
+        keep = ~ev["content"].fillna("").str.contains(EXCLUDE_MARKER, regex=False)
+    noop = (ev["op"] == "U") & (
+        (ev["old_content"] == ev["content"])
+        | (ev["old_content"].isna() & ev["content"].isna())
+    )
+    kept = (keep | poison) & ~noop
+    valid = ev[kept & ~poison]
+    return (
+        len(valid),
+        int((valid["op"] == "I").sum()),
+        int((valid["op"] == "U").sum()),
+        int((valid["op"] == "D").sum()),
+        int((kept & poison).sum()),
+        int(valid["seq"].max()),
+    )
+
+
 def _tables(spark, tmp_path, compact_rows=10**9):
     cow = LakeTable.create(spark, str(tmp_path / "cow"), REPO_FILES_SCHEMA, KEY_COLS, n_buckets=4)
     base = LakeTable.create(spark, str(tmp_path / "base"), REPO_FILES_SCHEMA, KEY_COLS, n_buckets=4)
@@ -169,12 +198,11 @@ def test_streaming_pipeline_through_mor(spark, tmp_path):
 
 
 def test_streaming_mor_with_metrics_does_not_deadlock(spark, tmp_path):
-    """Regression: the streaming fast path attaches its counters to the
-    bucket-probe collect, but MergeOnReadTable ignores prune_source —
-    the probe never runs. With metrics enabled, an observation attached
-    to that dead probe would block obs.get forever. The sink's
-    supports_prune_source flag must route the observation back onto the
-    batch plan (which MoR's delta-append write executes and delivers)."""
+    """A MergeOnReadTable sink runs the flagged apply flow: the counters
+    ride the one probe job (a MoR delta append runs no bucket probe of
+    its own), so with metrics enabled obs.get must not block, and every
+    epoch's counters must equal the pandas counts of that epoch's input
+    — the same pre-LWW event scope as a COW sink."""
     from movex_cdc_spark.sources.events import write_event_files
     from movex_cdc_spark.streaming.pipeline import CdcStreamPipeline
 
@@ -192,9 +220,12 @@ def test_streaming_mor_with_metrics_does_not_deadlock(spark, tmp_path):
     )
     epochs = pipe.run_available_now(timeout_s=300)
     assert len(epochs) == 2
-    assert all(e.get("counter_scope") == "deduped_keys" for e in epochs)
+    assert all(e.get("counter_scope") == "valid_events_pre_dedup" for e in epochs)
     rows = pipe.metrics.read().collect()
-    assert sum(r["events"] for r in rows) > 0
+    assert all(r["counter_scope"] == "valid_events_pre_dedup" for r in rows)
+    got = sorted(tuple(r[c] for c in COUNTERS) for r in rows)
+    want = sorted(expected_counters(ev.iloc[i * 600:(i + 1) * 600]) for i in range(2))
+    assert got == want
 
 
 def test_fast_path_dead_letters_survive_readmit(spark, tmp_path):
@@ -356,3 +387,64 @@ def test_mor_changes_chaining_reproduces_state(spark, tmp_path):
     }
     assert up_state == _state(down)
     assert len(up_state) > 0
+
+
+def test_mor_counters_ride_the_append_commit(spark, tmp_path):
+    """The delta's rows/delta_epochs counters commit in the SAME
+    metadata version as the appended segment. They used to follow in a
+    second commit: a crash between the two left the append committed
+    and its replay fenced, so the row counter under-counted for good
+    (and compaction fired late)."""
+    from movex_cdc_spark.lake.append_log import UnkeyedEventLog
+
+    _, mor = _tables(spark, tmp_path)
+    _, batches = _clean_batches(spark, n_events=600, epochs=2)
+    d0 = lww_dedup_maxby(batches[0], KEY_COLS)
+    n0 = d0.count()
+    v0 = mor.delta.meta()["version"]
+
+    real = UnkeyedEventLog._write_version
+    commits = []
+
+    def crash_after_first_commit(self, meta):
+        if commits:
+            raise RuntimeError("simulated crash")
+        commits.append(meta["version"])
+        return real(self, meta)
+
+    UnkeyedEventLog._write_version = crash_after_first_commit
+    try:
+        mor.merge(d0, epoch_id=0)
+    except RuntimeError:
+        pass  # crashed mid-protocol; the replay below must converge
+    finally:
+        UnkeyedEventLog._write_version = real
+    assert mor.merge(d0, epoch_id=0).get("skipped")  # the replay is fenced
+    m = mor.delta.meta()
+    assert m["version"] == v0 + 1  # one commit per appended epoch
+    assert (m["rows"], m["delta_epochs"]) == (n0, 1)
+
+    # a rival commit between the segment write and the commit: the
+    # counters rebase on the rival's metadata instead of overwriting it
+    stolen = {"done": False}
+
+    def rival_first(self, meta):
+        if not stolen["done"] and self is mor.delta and meta["epochs"].get("default") == 1:
+            stolen["done"] = True
+            rival = dict(self.meta())
+            rival["version"] += 1
+            rival["rows"] += 5
+            real(self, rival)
+        return real(self, meta)
+
+    d1 = lww_dedup_maxby(batches[1], KEY_COLS)
+    n1 = d1.count()
+    UnkeyedEventLog._write_version = rival_first
+    try:
+        lin = mor.merge(d1, epoch_id=1)
+    finally:
+        UnkeyedEventLog._write_version = real
+    assert stolen["done"]
+    m = mor.delta.meta()
+    assert lin["delta_rows"] == m["rows"] == n0 + 5 + n1
+    assert m["delta_epochs"] == 2 and m["epochs"]["default"] == 1

@@ -300,3 +300,72 @@ def test_multiplexed_null_table_tag_quarantined(spark, tmp_path):
     )
     epochs2 = pipe2.run_available_now()
     assert sum(e["n_strays"] for e in epochs2) == 3
+
+
+def test_multiplexed_counters_and_poison_free_table(spark, tmp_path, monkeypatch):
+    """Every mux table runs the flagged flow: each epoch's persisted
+    counters equal the pandas counts of that table's slice of the queue
+    file (pre-LWW event scope, same as the single-table stream), for a
+    COW and a merge-on-read sink. A table whose slice has no poison runs
+    no dead-letter append and leaves its dead-letter fence unset, and
+    every append that does run joins the query's job group."""
+    from dataclasses import replace
+
+    from test_mor import COUNTERS, expected_counters
+
+    from movex_cdc_spark.lake.mor import MergeOnReadTable
+    from movex_cdc_spark.operators.apply import DeadLetterTable
+
+    cfg = repo_files_config()
+    proto = cfg.tables.pop("repo_files")
+    proto.conditions["D"] = "content IS NULL OR NOT contains(content, 'EXCLUDE FILTER')"
+    for name in ("cow", "mor"):
+        cfg.tables[name] = replace(proto, name=name)
+    ev = {"cow": generate_events(GenParams(n_events=1200, seed=61, p_poison=0.05)),
+          "mor": generate_events(GenParams(n_events=1000, seed=62, p_poison=0.0))}
+    d = _stage_interleaved(spark, tmp_path, ev, n_files=2)
+    cow = LakeTable.create(spark, str(tmp_path / "cow"), REPO_FILES_SCHEMA,
+                           KEY_COLS, n_buckets=4)
+    mor_base = LakeTable.create(spark, str(tmp_path / "mor"), REPO_FILES_SCHEMA,
+                                KEY_COLS, n_buckets=4)
+    mor = MergeOnReadTable(mor_base, str(tmp_path / "mor-delta"))
+    appends = []
+    real_append = DeadLetterTable.append
+
+    def recording_append(self, poison, stream_id, epoch_id):
+        appends.append((stream_id, spark.sparkContext.getLocalProperty("spark.jobGroup.id")))
+        return real_append(self, poison, stream_id=stream_id, epoch_id=epoch_id)
+
+    monkeypatch.setattr(DeadLetterTable, "append", recording_append)
+    pipe = MultiplexedCdcPipeline(
+        spark, cfg, sinks={"cow": cow, "mor": mor},
+        events_dir=d, checkpoint_dir=str(tmp_path / "ck"),
+        dead_letter_dir=str(tmp_path / "dl"), metrics_dir=str(tmp_path / "metrics"),
+        max_files_per_trigger=1,
+    )
+    q = pipe.start(available_now=True)
+    q.awaitTermination(300)
+    assert q.exception() is None
+    pipe.metrics.flush()
+
+    rows = pipe.metrics.read().collect()
+    assert {r["counter_scope"] for r in rows} == {"valid_events_pre_dedup"}
+    for name, events in ev.items():
+        want = []
+        for f in sorted(os.listdir(d)):
+            qf = pd.read_parquet(os.path.join(d, f), columns=["table_name", "seq"])
+            seqs = set(qf.loc[qf["table_name"] == name, "seq"])
+            want.append(expected_counters(events[events["seq"].isin(seqs)]))
+        got = [tuple(r[c] for c in COUNTERS) for r in rows
+               if r["stream_id"] == f"cdc-mux:{name}"]
+        assert sorted(got) == sorted(want), name
+        base = pd.DataFrame(columns=["repo", "path", "commit", "lang", "content"])
+        truth = replay_oracle(base, events)[["repo", "path", "content_sha"]]
+        state = (pipe.sinks[name].read().select("repo", "path", "content_sha")
+                 .toPandas().sort_values(["repo", "path"]).reset_index(drop=True))
+        assert state.equals(truth), name
+
+    assert appends and {s for s, _ in appends} == {"cdc-mux:cow"}
+    assert {g for _, g in appends} == {str(q.runId)}
+    fences = UnkeyedEventLog.load(spark, str(tmp_path / "dl")).meta()["epochs"]
+    assert "cdc-mux:mor" not in fences and fences["cdc-mux:cow"] == 1
